@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
@@ -7,19 +7,22 @@ import org.apache.spark.sql.SparkSession
   * Queries are forced through the `noop` sink — a bare `count()` would let
   * Catalyst prune projections (hashes, arrays, window columns) and measure
   * only the scan. A JIT warm-up pass at the target SF runs first so codegen
-  * and classloading don't get billed to the first query.
+  * and classloading don't get billed to the first query. A query that
+  * throws is listed under `failed`, left out of the total, and makes the
+  * run exit 1.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    // --sf1 [outPath]: the one-command scale-regression artifact —
+    // --sf1 <outPath>: the one-command scale-regression artifact —
     // synthesize dev/sf1 (10×) when absent or from an older ScaleUp
     // perturbation scheme, run the full gate there, and write the full
-    // artifact (per-pass raws included) to outPath (default
-    // BENCH_sf1_r07.json) INSTEAD of bench_times.json, whose committed
-    // retry floor belongs to sf0.1.
+    // artifact (per-pass raws included) to outPath INSTEAD of
+    // bench_times.json, whose committed retry floor belongs to sf0.1.
     val sf1Mode = args.headOption.contains("--sf1")
-    val sf1Out = if (sf1Mode && args.length > 1) args(1)
-      else "BENCH_sf1_r07.json"
+    if (sf1Mode && args.length < 2) {
+      System.err.println("usage: graft.Bench [--sf1 <outPath>]")
+      sys.exit(2)
+    }
     if (sf1Mode) {
       val marker = java.nio.file.Paths.get("dev/sf1/_scaleup.json")
       // freshness = scheme version AND the exact synthesis parameters —
@@ -36,51 +39,11 @@ object Bench {
     }
     val sfDir = if (sf1Mode) "dev/sf1"
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", Scratchspace.sparkLocalDir)
-      // static conf, must precede session creation: the default 100-entry
-      // generated-class cache thrashes across 85 queries x several codegen
-      // stages each, re-running janino on every pass
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.registerAll(spark)
+    val cpus = Session.envCpus
+    val spark = Session.local(cpus)
 
-    def force(df: org.apache.spark.sql.DataFrame): Unit =
+    def force(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
-
-    // dev aid (SPARK_GRAFT_STALL_DUMP=1): when a query exceeds 5s, dump
-    // every live thread's stack once — tells slow-state diagnosis WHERE
-    // the serialized time goes (janino? broadcast await? shuffle fetch?)
-    val stallDump = sys.env.contains("SPARK_GRAFT_STALL_DUMP")
-    def timedForce(name: String, df: => org.apache.spark.sql.DataFrame): Unit = {
-      if (!stallDump) { force(df); return }
-      val t = new java.util.Timer(true)
-      t.schedule(new java.util.TimerTask {
-        def run(): Unit = {
-          import scala.jdk.CollectionConverters._
-          val sb = new StringBuilder(s"[stall] $name >5s; thread stacks:\n")
-          Thread.getAllStackTraces.asScala.foreach { case (th, frames) =>
-            if (th.getState != Thread.State.WAITING || frames.exists(f =>
-                !f.getClassName.startsWith("java.") &&
-                !f.getClassName.startsWith("jdk.") &&
-                !f.getClassName.startsWith("scala.concurrent"))) {
-              sb.append(s"  ${th.getName} ${th.getState}\n")
-              frames.take(14).foreach(f => sb.append(s"    $f\n"))
-            }
-          }
-          System.err.println(sb)
-        }
-      }, 5000L)
-      try force(df) finally t.cancel()
-    }
 
     // Session hygiene between queries — round 1's bench degraded 10-50×
     // over the run because leaked caches pinned generated classes (and with
@@ -106,8 +69,32 @@ object Bench {
     // limits the run for pass-over-pass diagnostics; SPARK_GRAFT_PASSES=N
     // adds full measured passes (default 2 + slow-tail third pass)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    def selected = SparkEntry.queries
+    val selected = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
+
+    // A query that throws is a failure, never a timing: time-to-failure
+    // would bill a broken query as a fast one. Its name goes in `failed`,
+    // later passes skip it, and it is left out of the total.
+    val failed = scala.collection.mutable.LinkedHashSet[String]()
+    def timed(name: String, fn: (SparkSession, String) => DataFrame,
+        dir: String, tag: String): Option[Double] = {
+      val t0 = System.nanoTime()
+      val ok = try { force(fn(spark, dir)); true } catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] $tag$name failed: ${e.getMessage}")
+          failed += name
+          false
+      }
+      val dt = (System.nanoTime() - t0) / 1e9
+      scrub()
+      if (ok) System.err.println(f"[bench] $tag$name $dt%.2f")
+      Option.when(ok)(dt)
+    }
+    def pass(names: Iterable[String], tag: String,
+        dir: String = sfDir): Map[String, Double] =
+      names.filterNot(failed).flatMap { name =>
+        timed(name, selected(name), dir, tag).map(name -> _)
+      }.toMap
 
     // Warm-up at the TARGET SF (not sf0.001): JIT, codegen cache, parquet
     // footers, and crucially the SAME generated classes the measured passes
@@ -121,24 +108,11 @@ object Bench {
     // warm times double as a per-query "known achievable" reference for
     // the outlier-retry phase below (first-compile cost inflates them, so
     // they are an upper bound on steady state — a conservative reference)
-    val warmTimes = selected.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try force(fn(spark, warm)) catch { case _: Throwable => () }
-      scrub()
-      name -> (System.nanoTime() - t0) / 1e9
-    }
+    val warmTimes = pass(selected.keys, "(warm) ", warm)
 
     // min of two passes: absorbs one-off janino compilation and scheduler
     // noise (this box shows ~10% CPU steal) without hiding real cost.
-    def pass(tag: String = ""): Seq[(String, Double)] =
-      selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try timedForce(name, fn(spark, sfDir)) catch { case _: Throwable => () }
-        val dt = (System.nanoTime() - t0) / 1e9
-        scrub()
-        System.err.println(f"[bench] $tag$name $dt%.2f")
-        name -> dt
-      }
+    val names = selected.keys.toSeq.sorted
     val extra = sys.env.get("SPARK_GRAFT_PASSES").map(_.toInt).getOrElse(2)
     // every raw pass is persisted alongside the min (estimator
     // transparency: the min-of-passes + bounded-retry estimator is
@@ -146,38 +120,24 @@ object Bench {
     // but the artifact must let a reader audit its effect)
     val rawPasses =
       scala.collection.mutable.LinkedHashMap[String, Map[String, Double]]()
-    val p1 = pass().toMap
-    rawPasses("p1") = p1
+    // per query, the min over every raw pass so far
+    def mins(): Seq[(String, Double)] = names.filterNot(failed).map { name =>
+      name -> rawPasses.values.flatMap(_.get(name)).min
+    }
+    rawPasses("p1") = pass(names, "")
     System.gc()
-    val p2 = pass().toMap
-    rawPasses("p2") = p2
-    var acc = p2.toSeq.map { case (name, v) => name -> math.min(v, p1(name)) }
+    rawPasses("p2") = pass(names, "")
     for (i <- 3 to extra) {
       System.gc()
-      val pn = pass(s"(p$i) ").toMap
-      rawPasses(s"p$i") = pn
-      acc = acc.map { case (name, v) => name -> math.min(v, pn(name)) }
+      rawPasses(s"p$i") = pass(names, s"(p$i) ")
     }
-    val twoPass = acc
     // third pass for the slowest queries only: this box shows ~10% CPU
     // steal and the heavy queries swing 1-3× between passes — min-of-3 on
     // the tail pins them down without tripling the whole run.
-    val slow = twoPass.sortBy(-_._2).take(16).map(_._1).toSet
+    val slow = mins().sortBy(-_._2).take(16).map(_._1)
     System.gc()
-    val p3 = selected.toSeq.sortBy(_._1)
-      .filter { case (name, _) => slow(name) }
-      .map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try force(fn(spark, sfDir)) catch { case _: Throwable => () }
-        val dt = (System.nanoTime() - t0) / 1e9
-        scrub()
-        System.err.println(f"[bench] (p3) $name $dt%.2f")
-        name -> dt
-      }.toMap
-    rawPasses("p3_tail") = p3
-    val afterP3 = twoPass.map { case (name, v) =>
-      name -> math.min(v, p3.getOrElse(name, v))
-    }
+    rawPasses("p3_tail") = pass(slow.sorted, "(p3) ")
+    val afterP3 = mins()
     // Outlier retry: this JVM intermittently drops a query's interpreted-
     // expression hot path out of JIT'd state for a whole pass (diagnosed
     // via stall stack dumps: ArrayFilter.nullSafeEval running 20-50×
@@ -204,7 +164,7 @@ object Bench {
         else """"(q[^"]+)":([0-9.]+)""".r.findAllMatchIn(txt)
           .map(m => m.group(1) -> m.group(2).toDouble).toMap
       } catch { case _: Throwable => Map.empty }
-    val wt = warmTimes.toMap.map { case (name, w) =>
+    val wt = warmTimes.map { case (name, w) =>
       name -> math.min(w, committed.getOrElse(name, w)) }
     val suspect = afterP3
       .filter { case (name, v) =>
@@ -216,20 +176,14 @@ object Bench {
     val results = afterP3.map { case (name, v) =>
       if (!suspect(name)) name -> v
       else {
-        val fn = SparkEntry.queries(name)
-        val retries = (1 to 2).map { i =>
+        val retries = (1 to 2).flatMap { i =>
           System.gc()
-          val t0 = System.nanoTime()
-          try force(fn(spark, sfDir)) catch { case _: Throwable => () }
-          val dt = (System.nanoTime() - t0) / 1e9
-          scrub()
-          System.err.println(f"[bench] (retry$i) $name $dt%.2f")
-          dt
+          timed(name, selected(name), sfDir, s"(retry$i) ")
         }
         retryRaw(name) = retries
         name -> (retries :+ v).min
       }
-    }
+    }.filterNot { case (name, _) => failed(name) }
     def jmap(m: Iterable[(String, Double)]): String =
       m.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val qs = jmap(results)
@@ -241,12 +195,13 @@ object Bench {
          "\"" + k + "\":[" + vs.mkString(",") + "]" }.mkString("{", ",", "}"))))
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
+    val fails = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     // stdout line stays raw-free: the driver tail-captures stdout, and a
     // 25KB raw block could push the JSON head past the capture window
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$fails,"sf":"$sfDir"}"""
     val lineFull =
-      s"""{"metric":"total","value":$total,"unit":"sec","raw":$raw,"queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","raw":$raw,"queries":$qs,"failed":$fails,"sf":"$sfDir"}"""
     // The driver captures only a bounded tail of stdout — r3 lost 18 of 83
     // per-query timings to truncation. Persist the full artifact too —
     // but NEVER from a SPARK_GRAFT_BENCH_ONLY subset run, which would
@@ -254,7 +209,7 @@ object Bench {
     // corruption shipped once; see the round-5 review).
     if (only.isEmpty) {
       val out = java.nio.file.Paths.get(
-        if (sf1Mode) sf1Out else "bench_times.json")
+        if (sf1Mode) args(1) else "bench_times.json")
       java.nio.file.Files.write(out, lineFull.getBytes("UTF-8"))
     }
     println(line)
@@ -265,8 +220,9 @@ object Bench {
     // the capture window; the per-query map lives in bench_times.json
     // (written above) and in the full line for anyone with unbounded stdout.
     val compact =
-      s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"cpus":$cpus,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"failed":$fails,"cpus":$cpus,"sf":"$sfDir"}"""
     println(compact)
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

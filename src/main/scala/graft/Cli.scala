@@ -30,17 +30,7 @@ import graft.shipping.Views
   */
 object Cli {
 
-  private def session(): SparkSession = {
-    val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.plans.GraftExtensions.registerAll(s)
-    s
-  }
+  private def session(): SparkSession = Session.local(Session.envCpus)
 
   def main(args: Array[String]): Unit = args.toList match {
     case "receive" :: feedDir :: ndjson :: Nil =>

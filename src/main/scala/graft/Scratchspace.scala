@@ -20,12 +20,4 @@ object Scratchspace {
       d.getPath
     } else System.getProperty("java.io.tmpdir", "/tmp")
   }
-
-  /** Spark local dir (shuffle, spill, broadcast disk blocks) on the
-    * scratch root. */
-  lazy val sparkLocalDir: String = {
-    val d = new java.io.File(root, "spark-local")
-    d.mkdirs()
-    d.getPath
-  }
 }

@@ -1,7 +1,5 @@
 package graft.dev
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev probe: prints whether any codegen stage of the named queries falls
   * back to interpreted mode (hugeMethodLimit / compile failure shows up as
   * a missing WholeStageCodegen span or a codegen fallback warning).
@@ -9,13 +7,7 @@ import org.apache.spark.sql.SparkSession
 object CodegenProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(graft.Session.envCpus)
     for (name <- args.drop(1)) {
       val df = graft.SparkEntry.queries(name)(spark, dir)
       df.collect() // executes THIS QueryExecution, finalizing the AQE plan

@@ -1,6 +1,5 @@
 package graft.dev
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** q34's mint shape at scale, with the MintStats the gate hides:
@@ -16,17 +15,7 @@ object MintProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val n = if (args.length > 1) args(1).toInt else 50
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.Scratchspace.sparkLocalDir)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.registerAll(spark)
+    val spark = graft.Session.local(graft.Session.envCpus)
     val existing = spark.read.parquet(s"$dir/customer.parquet")
       .select(substring(md5(col("c_custkey").cast("string")), 1, 8)
         .as("code"))

@@ -1,7 +1,6 @@
 package graft.dev
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev main (not part of the contract): write `.explain("formatted")`
@@ -18,15 +17,7 @@ object PlanDump {
       sys.exit(2)
     }
     val Array(outDir, suffix, sfDir, rest @ _*) = args
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.Scratchspace.sparkLocalDir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.GraftExtensions.registerAll(spark)
+    val spark = graft.Session.local(graft.Session.envCpus)
     Files.createDirectories(Paths.get(outDir))
     rest.foreach { name =>
       val df = graft.SparkEntry.queries(name)(spark, sfDir)

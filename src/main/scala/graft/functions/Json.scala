@@ -14,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * `JsonTuple`) is a `CodegenFallback` that instantiates a Jackson
   * parser per row — measured ~1.3 s of q53_pa_v2's 1.9 s at sf0.1 for a
   * 20-char document, and identical costs for all three built-ins
-  * (dev/ProbeQ53). This scanner walks the UTF8String's bytes DIRECTLY
+  * (dev/PERF_r7.md). This scanner walks the UTF8String's bytes DIRECTLY
   * (structural JSON characters are all ASCII, and UTF-8 continuation
   * bytes are ≥ 0x80 so they can never be mistaken for one) — zero
   * copies of the document, no parser object, no token stream; the only

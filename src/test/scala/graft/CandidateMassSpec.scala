@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.operators.{CandidateMassExceededException, Dedup, TextAnalysis}
 
@@ -14,15 +13,7 @@ import graft.operators.{CandidateMassExceededException, Dedup, TextAnalysis}
   * to the LSH-gated form, and `jaccardPairsAuto` must route there
   * silently.
   */
-class CandidateMassSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class CandidateMassSpec extends AnyFunSuite with SparkSpec {
 
   /** Worst case for every exact prefilter: 40 docs over ONE shared
     * 12-token template (pairwise Jaccard 1.0) — every gram's df is 40,

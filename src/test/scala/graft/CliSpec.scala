@@ -2,26 +2,15 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** End-to-end CLI cycle on temp dirs: receive → FHIR ETL (dry-run, then
   * commit) → idempotent second cycle → view refresh — the reference's
   * operational loop (`id3c receive`, `id3c etl fhir --commit`,
   * `refresh-materialized-view`) against the library.
   */
-class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class CliSpec extends AnyFunSuite with SparkSpec {
 
   private def tmp(): String =
     Files.createTempDirectory("graft-cli").toString

@@ -13,6 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * mechanical in both directions: search COVERAGE.md before writing,
   * list the operator after writing or the build goes red.
   *
+  * Also guards that every session comes from [[Session.local]].
+  *
   * Pure file parsing — no SparkSession; runs in milliseconds.
   */
 class CoverageGuardSpec extends AnyFunSuite {
@@ -59,6 +61,20 @@ class CoverageGuardSpec extends AnyFunSuite {
         s"appendix entry BEFORE shipping — or make the member private if " +
         s"it is an implementation detail):\n  " +
         missing.map { case (f, n) => s"$f: $n" }.mkString("\n  "))
+  }
+
+  test("graft.Session is the only place in src/ that builds a SparkSession") {
+    // split so this file does not match its own search
+    val builder = "SparkSession" + ".builder"
+    val walk = Files.walk(Paths.get("src"))
+    val builders =
+      try walk.iterator().asScala.toSeq
+        .filter(_.toString.endsWith(".scala"))
+        .filter(f => Files.readString(f).contains(builder))
+        .map(_.toString)
+      finally walk.close()
+    assert(builders == Seq("src/main/scala/graft/Session.scala"),
+      s"only graft.Session may call $builder; use Session.local instead")
   }
 
   test("the guard itself sees a realistic member count (not a regex rot)") {

@@ -3,22 +3,12 @@ package graft
 import java.io.{ByteArrayOutputStream, FileOutputStream}
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.operators.Deletes
 import graft.sources.Xlsx
 
-class DeletesXlsxSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class DeletesXlsxSpec extends AnyFunSuite with SparkSpec {
 
   test("Deletes.likeToRegex handles %, _ and regex metacharacters") {
     assert(Deletes.likeToRegex("http://a.b/7/%") == "http://a\\.b/7/.*")

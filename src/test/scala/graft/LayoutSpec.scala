@@ -2,10 +2,8 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.operators.Layout
 
@@ -13,19 +11,7 @@ import graft.operators.Layout
   * per-file min/max on both dimensions (measured from the written files,
   * not the plan), and co-bucketed tables must join with zero exchange.
   */
-class LayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private val warehouse = Files.createTempDirectory("graft_wh").toString
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir", warehouse)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class LayoutSpec extends AnyFunSuite with SparkSpec {
 
   test("writeZClustered keeps per-file min/max tight on BOTH dimensions") {
     import spark.implicits._

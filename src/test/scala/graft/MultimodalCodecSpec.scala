@@ -3,9 +3,7 @@ package graft
 import java.awt.image.BufferedImage
 import java.io.ByteArrayOutputStream
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.operators.Multimodal
 import graft.operators.Multimodal.{Blob, ImageIoCodec}
@@ -16,15 +14,7 @@ import graft.operators.Multimodal.{Blob, ImageIoCodec}
   * without external fixtures. The gate queries keep the byte-stub (the
   * oracle must reproduce the arithmetic); this spec pins the codec.
   */
-class MultimodalCodecSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class MultimodalCodecSpec extends AnyFunSuite with SparkSpec {
 
   /** Deterministic w×h RGB PNG: pixel (x,y) = rgb(x·17 % 256, y·31 %
     * 256, (x+y)·7 % 256), lossless so decode is exact on any JDK.

@@ -1,25 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.operators._
 
 /** Unit specs per operator (SURVEY.md §5: the reference is doctest-dense;
   * we mirror that with per-operator assertions on tiny inline data).
   */
-class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class OperatorsSpec extends AnyFunSuite with SparkSpec {
 
   import scala.jdk.CollectionConverters._
 
@@ -66,7 +55,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("GraftExtensions.registerAll: every native expression is callable " +
       "from plain spark.sql") {
-    graft.plans.GraftExtensions.registerAll(spark)
+    // Session.local ran registerAll: the functions resolve with no call here
     val r = spark.sql(
       """SELECT hamming_distance('abcd', 'abxd') AS hd,
         |  hamming_distance_lte('abcd', 'abxd', 1) AS lte,
@@ -89,6 +78,14 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val before = spark.experimental.extraOptimizations.size
     graft.plans.GraftExtensions.registerAll(spark)
     assert(spark.experimental.extraOptimizations.size == before)
+    // a second factory call returns the live session with each rule once
+    assert(Session.local(4) eq spark)
+    val rules = spark.experimental.extraOptimizations
+    assert(rules.count(_ eq graft.plans.HammingThresholdRewrite) == 1)
+    assert(rules.count(_ eq graft.plans.RegexpCountExistenceRewrite) == 1)
+    assert(spark.conf.get(
+      "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold") == "256m")
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
   }
 
   test("barcode_slices matches the reference slice definition") {

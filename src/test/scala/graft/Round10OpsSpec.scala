@@ -1,25 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+
+import graft.SparkSpec
 
 /** Round-10 specs: the optimization round's kernel-equivalence pins —
   * each rewritten hot path is asserted byte-equal to the Column
   * formulation it replaced, on the edge shapes that differ between
   * naive implementations.
   */
-class Round10OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class Round10OpsSpec extends AnyFunSuite with SparkSpec {
 
   /** The r9 HOF formulation of the canonical query suffix, verbatim
     * (the interpreted chain [[graft.functions.canonicalQuery]]

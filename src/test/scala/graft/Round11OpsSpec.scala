@@ -1,25 +1,17 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+
+import graft.SparkSpec
 
 /** Round-11 specs: the second optimization round's equivalence pins —
   * the codegen jsonb merge vs the Jackson UDF it replaced, the shared
   * shingle-frame derivations vs their from-raw-text originals, and the
   * single tagged band frame vs the per-plan-group union it fused.
   */
-class Round11OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class Round11OpsSpec extends AnyFunSuite with SparkSpec {
 
   // ---- jsonb_merge_shallow: codegen expression vs the Jackson UDF ----
 

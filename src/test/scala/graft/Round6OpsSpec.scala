@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.operators._
 
@@ -11,16 +9,7 @@ import graft.operators._
   * surprise scoring, k-center coreset selection, scene-cut detection and
   * the Gini dispersion profile — all against hand-computed fixtures.
   */
-class Round6OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class Round6OpsSpec extends AnyFunSuite with SparkSpec {
 
   test("tfidfTopTerms ranks by rational tf·idf with blank docs in N") {
     import spark.implicits._

@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+
+import graft.SparkSpec
 
 /** Round-9 specs: the ADVICE r8 hardening items (fanOutIfNarrow AQE
   * gating, winnow_minima SQL edge cases, sorted_intersect_count
@@ -12,16 +12,7 @@ import org.scalatest.BeforeAndAfterAll
   * Lives in graft.operators so it can exercise the private[operators]
   * helpers directly.
   */
-class Round9OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class Round9OpsSpec extends AnyFunSuite with SparkSpec {
 
   test("fanOutIfNarrow: shuffle-rooted frame returned untouched (no AQE probe)") {
     import spark.implicits._
@@ -58,7 +49,6 @@ class Round9OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("winnow_minima SQL: empty array yields empty, null element errors") {
-    graft.plans.GraftExtensions.registerAll(spark)
     assert(spark.sql("select winnow_minima(array(), 3)")
       .head().getSeq[Long](0).isEmpty)
     assert(spark.sql("select winnow_minima(array(9L, 4L, 7L, 2L), 2)")
@@ -231,7 +221,6 @@ class Round9OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("sorted_intersect_count: DESCRIBE FUNCTION surfaces the precondition") {
-    graft.plans.GraftExtensions.registerAll(spark)
     val txt = spark.sql("describe function extended sorted_intersect_count")
       .collect().map(_.getString(0)).mkString("\n")
     assert(txt.contains("PRECONDITION"), s"got:\n$txt")

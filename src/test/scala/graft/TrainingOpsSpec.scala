@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.operators._
 
@@ -11,16 +9,7 @@ import graft.operators._
   * repetition signals, per-group caps, temperature resampling, exact
   * mean-pooling and quantized k-means.
   */
-class TrainingOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class TrainingOpsSpec extends AnyFunSuite with SparkSpec {
 
   test("redactPii masks emails, IPs and phones; leaves clean text alone") {
     import spark.implicits._
@@ -667,7 +656,6 @@ class TrainingOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect()
     mf.foreach { r => assert(r.isNullAt(0) && r.isNullAt(1)) }
     // SQL registration works
-    graft.plans.GraftExtensions.registerAll(spark)
     val viaSql = spark.sql(
       """select json_scalar_field('{"k":"v"}', 'k')""").head().getString(0)
     assert(viaSql == "v")
@@ -717,7 +705,6 @@ class TrainingOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .head()
     assert(nl.isNullAt(0))
     // SQL registration works
-    graft.plans.GraftExtensions.registerAll(spark)
     assert(spark.sql(
       "select sorted_intersect_count(array(1L,2L,3L), array(2L,3L,9L))")
       .head().getInt(0) == 2)
@@ -774,7 +761,6 @@ class TrainingOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         Dedup.wordShingleHashes(col("t"), 3)).head()
     assert(nr.isNullAt(0) && nr.isNullAt(1) && nr.isNullAt(2))
     // SQL registration
-    graft.plans.GraftExtensions.registerAll(spark)
     assert(spark.sql("select word_ngrams('a b c', 2)").head()
       .getSeq[String](0) == Seq("a b", "b c"))
     assert(spark.sql(

@@ -2,9 +2,7 @@ package graft
 
 import java.io.{ByteArrayOutputStream, FileOutputStream}
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.sources.Xls
 
@@ -14,15 +12,7 @@ import graft.sources.Xls
   * the reader (SST CONTINUE splits, RK/MULRK encodings, both the
   * regular-FAT and mini-FAT stream placements).
   */
-class XlsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class XlsSpec extends AnyFunSuite with SparkSpec {
 
   // ---- little-endian emit helpers ------------------------------------
   private def w16(o: ByteArrayOutputStream, v: Int): Unit = {
